@@ -62,12 +62,15 @@ Scale notes (10^10 frontier, 1000 executors):
 from __future__ import annotations
 
 import json
+import logging
 import os
+from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
+from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -93,6 +96,8 @@ from ..functions.urls import (
 from .bloom import PartitionedBloom, bitmap_delta, check_hashes
 from .catalog import CheckpointCatalog
 from .pagestore import load_store
+
+log = logging.getLogger(__name__)
 
 FETCH_SCHEMA = StructType([
     StructField("site", StringType()),
@@ -367,7 +372,7 @@ class SiteState:
     # exact live-frontier row count (seeds + pushed − popped, updated
     # from the same metrics rollup that feeds pops_since_compact).
     # None = unknown (checkpoint predating the field) — every consumer
-    # falls back to the budget-only bound (_FRONTIER_SIZE_BOUNDS).
+    # falls back to the budget-only bound.
     frontier_rows: int | None = None
 
 
@@ -386,64 +391,46 @@ _HIST_RANKS = tuple(64 * 8 ** i for i in range(10))  # 64 … ~8.6e9
 
 # Concurrent snapshot writes per maintenance (compaction) pass — the
 # independent corpus-sized rewrites overlap; bounded to keep peak
-# execution-memory/spill pressure in check (1 = the pre-round-5 serial
-# behavior; scripts/bench_compact_ab.py measures the difference).
+# execution-memory/spill pressure in check. Measured (round 5,
+# interleaved one-JVM median of 3, 10^6-row corpus): 5.48 s serial →
+# 2.77 s with 4 workers.
 _COMPACT_POOL_WORKERS = 4
 
-# Latency-mode static width policy: size the width to the selection
-# bound (sites × prefix_k — the largest frame any latency-round
-# exchange carries) rather than the ~64×-smaller pop bound. False =
-# the pre-round-5 pop-bound-only policy (scripts/bench_selwidth_ab.py
-# measures the difference).
-_LATENCY_WIDTH_FROM_SEL_BOUND = True
 
-# Round-6: derive the round's row-count bounds from the driver-tracked
-# per-site LIVE-FRONTIER sizes instead of the configured budgets alone.
-# The tracked size is exact (seeds + pushed − popped, both already in
-# the per-round metrics rollup), and every bound it feeds is a true
-# upper bound on the frame it gates:
-#   * pops per site ≤ live frontier rows (can't pop rows that don't
-#     exist) — so the latency-mode gate and the broadcast-hint guards
-#     see the ROUND's real size, not a budget sized for mega-waves
-#     (the bench crawl's budget is 100k/site while its frontier never
-#     exceeds ~20k rows: budget-only bounds kept every round on the
-#     AQE per-stage-submission path and dropped every forced
-#     broadcast hint).
-#   * a site whose live frontier is empty can never pop or push again
-#     (links are same-site), so it retires at round START — the
-#     crawl's final empty round costs zero Spark jobs instead of a
-#     full selection pipeline (~3 s at the bench shape).
-# Sizes resumed from a pre-round-6 checkpoint are unknown (None) and
-# fall back to the budget-only bounds. False = round-5 behavior
-# (scripts/bench_crawl_ab_r06.py measures the difference).
-_FRONTIER_SIZE_BOUNDS = True
+@dataclass
+class _Round:
+    """State of one round, passed explicitly to each of its phases.
 
-# Round-6: skip the Bloom prefilter (a Python-worker stage per call
-# site) while the visited table is under the adaptive-prune floor —
-# the exact membership check subsumes it at identical results (a Bloom
-# probe has no false negatives; ``_maybe=True`` is its no-information
-# answer). False = round-5 behavior (always probe).
-_BLOOM_PROBE_ADAPTIVE = True
+    ``pop_bound`` bounds the popped rows: the cutoff admits ≤ budget
+    admissible and < budget inadmissible rows per site, and no site
+    pops more rows than its live frontier holds. ``sel_bound`` bounds
+    the selection pipeline's frames (candidate prefix + admission) at
+    the first escalation step; ``prefix_bound`` is the same bound at
+    the current step. The bounds gate the forced-broadcast hints and
+    the latency-mode compile. ``probe_bloom`` says whether the Bloom
+    prefilter runs (see :meth:`CrawlEngine._bloom_split`), and
+    ``bloom_bc``/``bloom_table`` carry the filter for it. ``jobs`` holds
+    every background job the round submitted, in submission order;
+    ``staged`` the delta dirs it wrote; ``tmp`` the round-scoped
+    persisted frames."""
+    no: int
+    now: float
+    pop_bound: int
+    sel_bound: int
+    probe_bloom: bool
+    bloom_bc: Broadcast | None = None
+    bloom_table: DataFrame | None = None
+    prefix_bound: int | None = None
+    tmp: list[DataFrame] = field(default_factory=list)
+    jobs: list[_Job] = field(default_factory=list)
+    staged: dict[str, list[str]] = field(default_factory=dict)
 
-# Round-6 (second pass): two tracked-size-proven action skips.
-# (a) Skip the escalation stats collect when every budget site's
-# tracked live frontier is smaller than prefix_k — no site can fill
-# its prefix, so escalation is impossible and the collect is a
-# driver-blocking job serialized between selection and fetch; the
-# popped checkpoint then materializes inside the round's first eager
-# job instead. (b) Skip run_round's existence-only _live_frontier()
-# build (a per-round catalog parquet read) when any tracked size
-# proves frontier rows exist. False = round-6-first-pass behavior
-# (the measuring arm of scripts/bench_statskip_ab.py).
-_ESCALATION_STATS_SKIP = True
 
-# Round-6 (second pass): on the skip path, kick an async noop
-# materialization of the admission frame so the selection pipeline
-# executes on the executors while the driver plans the popped
-# checkpoint + early _execute_round frames (guide §2.6). False = plan
-# first, materialize in the first eager job
-# (scripts/bench_preselkick_ab.py measures the difference).
-_PRESEL_KICK = True
+@dataclass
+class _Job:
+    future: Future
+    table: str | None = None  # staged write: the table its dir belongs to
+    advisory: bool = False    # noop kick: a failure never aborts a round
 
 
 class CrawlEngine:
@@ -490,12 +477,9 @@ class CrawlEngine:
                     "_rob_allow_all boolean")) if self.robots else None
         self._bloom = PartitionedBloom(self.cfg.bloom_num_partitions,
                                        bits_per_partition=1 << 17)
-        self._bloom_bc = None
-        self._bloom_table: DataFrame | None = None
-        self._eager_pool = None
-        # async pre-selection materialization futures (the skip-path
-        # cand noop kick in _select_pops), joined at the round barrier
-        self._presel_futs: list = []
+        # one background-job pool per ENGINE, reused across rounds:
+        # threads spawn lazily and idle between rounds
+        self._eager_pool: ThreadPoolExecutor | None = None
         self._initial_url_seen = initial_url_seen or []
         self._restore_or_init()
 
@@ -777,20 +761,21 @@ class CrawlEngine:
             return big.filter(F.col("bucket").isin(bucket_list))
         return self._prune_buckets(big, keys, key_col)
 
-    def _seen_for(self, keys: DataFrame, key_col: str = "url") -> DataFrame | None:
+    def _seen_for(self, keys: DataFrame, key_col: str,
+                  est_rows: int) -> DataFrame | None:
         """Latest-wins url_seen rows for exactly the round's key set:
         bucket-prune the log, broadcast-semi-join the keys, then window
         only the survivors. Per-url latest-wins commutes with a per-url
         semi-join, so this equals ``_url_seen_latest`` restricted to
         the keys — without shuffling or windowing the corpus (the
-        round-2 verdict's #1 scale blocker)."""
+        round-2 verdict's #1 scale blocker). ``est_rows`` bounds the
+        key count (see :meth:`_bc`)."""
         log = self.catalog.read("url_seen_log")
         if log is None:
             return None
         pruned = (self._pruned("url_seen_log", log, keys, key_col)
                   .join(self._bc(keys.select(F.col(key_col).alias("url"))
-                                 .distinct(),
-                                 getattr(self, "_pop_bound", None)),
+                                 .distinct(), est_rows),
                         "url", "left_semi"))
         w = Window.partitionBy("url").orderBy(F.desc("round"))
         return (pruned.withColumn("_rn", F.row_number().over(w))
@@ -864,14 +849,11 @@ class CrawlEngine:
     def run_round(self) -> bool:
         """One admission+fetch round across all active sites. Returns
         False when no site had frontier left (crawl complete)."""
-        now = T0 + self.round_no * self.cfg.round_seconds
         # the live-frontier view is only built here to detect the
         # no-frontier-at-all case; when any tracked size proves rows
         # exist, skip the per-round catalog read (driver-side parquet
         # listing + plan construction) that the view costs
-        if not (_ESCALATION_STATS_SKIP and _FRONTIER_SIZE_BOUNDS
-                and any(st.frontier_rows for st in self.sites.values()
-                        if st.frontier_rows is not None)):
+        if not any(st.frontier_rows for st in self.sites.values()):
             if self._live_frontier() is None:
                 for s in self.sites.values():
                     s.active = False
@@ -886,14 +868,14 @@ class CrawlEngine:
             if mp and mp > 0:
                 b = min(b, mp - st.pages_visited)
             budgets[name] = max(b, 0)
-        if _FRONTIER_SIZE_BOUNDS:
-            # a site whose tracked live frontier is empty can never pop
-            # or push again (links are same-site): retire it at round
-            # start, before any Spark job — when every site is empty
-            # the crawl's final round costs nothing
-            for name in list(budgets):
-                if self.sites[name].frontier_rows == 0:
-                    budgets.pop(name)
+        # a site whose tracked live frontier is empty can never pop or
+        # push again (links are same-site): retire it at round start,
+        # before any Spark job — when every site is empty the crawl's
+        # final round costs nothing instead of a full selection
+        # pipeline (~3 s at the bench shape)
+        for name in list(budgets):
+            if self.sites[name].frontier_rows == 0:
+                budgets.pop(name)
         active_sites = [n for n, b in budgets.items() if b > 0]
         for name, st in self.sites.items():
             if st.active and name not in active_sites:
@@ -902,82 +884,71 @@ class CrawlEngine:
             return False
         budgets = {s: budgets[s] for s in active_sites}
 
-        def _fr(name: str) -> int | None:
-            return (self.sites[name].frontier_rows
-                    if _FRONTIER_SIZE_BOUNDS else None)
-
-        # row-count bound for this round's popped set, used to gate the
-        # forced-broadcast hints and the latency-mode compile: the
-        # cutoff admits ≤ budget admissible rows and < budget
-        # inadmissible rows per site, and no site can pop more rows
-        # than its live frontier holds — take the tighter of the two
-        # (frontier sizes are exact driver state; unknown = None falls
-        # back to the budget-only bound)
-        self._pop_bound = sum(
-            2 * b if _fr(s) is None else min(2 * b, _fr(s))
-            for s, b in budgets.items())
-        # row-count bound for the SELECTION pipeline's intermediate
-        # frames (candidate prefix + admission): min(prefix_k, live
-        # frontier rows) per site at the escalation's first iteration
-        # (the prefix can't exceed the frontier it is drawn from).
-        # Without frontier sizes this is sites × prefix_k — ~64× the
-        # pop bound; the latency-mode static width must be sized to
-        # this, not the pop bound, or a 2k-URL round over many sites
-        # funnels a ~10^5-row prefix through width-1 exchanges
-        # (single-threaded top-K kernel + window).
-        pk0 = max(budgets.values()) * 8 + 64
-        self._sel_bound = sum(
-            pk0 if _fr(s) is None else min(pk0, _fr(s))
-            for s in budgets)
-
+        # row-count bounds from the driver-tracked live-frontier sizes,
+        # not the configured budgets alone: the bench crawl's budget is
+        # 100k/site while its frontier never exceeds ~20k rows, and
+        # budget-only bounds kept every round on the AQE per-stage
+        # path and dropped every forced broadcast hint. Unknown sizes
+        # (legacy or injected state) fall back to the budget-only
+        # bound. Measured with the adaptive Bloom-probe skip (round 6,
+        # interleaved median of 3): bench crawl_round 35.6 → 28.2 s.
+        # The selection bound is ~64× the pop bound; the latency-mode
+        # width must be sized to it, or a 2k-URL round over many sites
+        # funnels a ~10^5-row prefix through width-1 exchanges.
+        prefix_k = max(budgets.values()) * 8 + 64
+        rnd = _Round(
+            no=self.round_no,
+            now=T0 + self.round_no * self.cfg.round_seconds,
+            pop_bound=sum(self._frontier_cap(s, 2 * b)
+                          for s, b in budgets.items()),
+            sel_bound=sum(self._frontier_cap(s, prefix_k) for s in budgets),
+            probe_bloom=(self.catalog.table_bytes("visited")
+                         >= self.cfg.prune_min_bytes))
         # broadcast mode: one Bloom broadcast per round, shared by
         # admission and link dedup, released at the round barrier
-        # (leaking one copy per round would OOM the executors).
-        # cogroup mode: the filter never leaves the bloom_parts table —
-        # one latest-wins view per round feeds the cogrouped probes.
-        # Rounds that will skip the probe (visited under the adaptive
-        # floor, see _bloom_split) skip the broadcast/view too.
-        self._bloom_probe_skip = _BLOOM_PROBE_ADAPTIVE and (
-            self.catalog.table_bytes("visited") < self.cfg.prune_min_bytes)
-        if self._bloom_probe_skip:
-            self._bloom_bc = None
-            self._bloom_table = None
-        elif self.cfg.bloom_probe_mode == "broadcast":
-            self._bloom_bc = self.spark.sparkContext.broadcast(
-                [p for p in self._bloom.parts])
-            self._bloom_table = None
+        # (leaking one copy per round would OOM the executors); rounds
+        # that skip the probe (see _bloom_split) skip it too. cogroup
+        # mode: the filter never leaves the bloom_parts table — one
+        # latest-wins view per round feeds the cogrouped probes and the
+        # executor-side delta merge, so it is built even when the
+        # probe is skipped.
+        if self.cfg.bloom_probe_mode == "broadcast":
+            if rnd.probe_bloom:
+                rnd.bloom_bc = self.spark.sparkContext.broadcast(
+                    [p for p in self._bloom.parts])
         else:
-            self._bloom_bc = None
-            self._bloom_table = self._bloom_latest()
-        self._round_tmp: list[DataFrame] = []
+            rnd.bloom_table = self._bloom_latest()
         try:
-            with self._latency_mode():
-                popped = self._select_pops(budgets)
+            with self._latency_mode(rnd):
+                popped = self._select_pops(rnd, budgets)
                 if popped is None:
                     for name in active_sites:
                         self.sites[name].active = False
                     return False
-                progressed = self._execute_round(popped, now)
+                progressed = self._execute_round(rnd, popped)
         finally:
-            # drop any un-joined pre-selection future (aborted round):
-            # the noop is side-effect-free and must not leak into the
-            # next round's barrier join
-            self._presel_futs = []
-            for df in self._round_tmp:
+            # an aborted round must not leave its jobs reading frames
+            # released below, or leak them into the next round
+            self._drain_jobs(rnd)
+            for df in rnd.tmp:
                 df.unpersist()
-            self._round_tmp = []
-            if self._bloom_bc is not None:
-                self._bloom_bc.destroy()
-            self._bloom_bc = None
-            self._bloom_table = None
+            if rnd.bloom_bc is not None:
+                rnd.bloom_bc.destroy()
         # compaction is corpus-sized — always compiled under AQE,
         # outside the latency scope (round frames are already released)
         if self.cfg.compact_every and self.round_no % self.cfg.compact_every == 0:
             self._compact()
         return progressed
 
+    def _frontier_cap(self, site: str, n: int) -> int:
+        """``n`` capped by the site's tracked live-frontier size (no
+        frame drawn from a site's frontier can hold more rows than the
+        frontier); unknown sizes leave ``n`` as is."""
+        rows = self.sites[site].frontier_rows
+        return n if rows is None else min(n, rows)
+
     @contextmanager
-    def _latency_mode(self):
+    def _latency_mode(self, rnd: _Round):
         """Latency-bound small rounds compile their barrier actions
         without AQE. The round's selection pipeline is ~12 exchanges
         deep (two-phase top-K windows, the Bloom cogroup, admission
@@ -993,7 +964,7 @@ class CrawlEngine:
         frames hold at most ~10^5 rows, and 8 wide static exchanges
         beat 32 near-empty tasks per stage."""
         thr = self.cfg.latency_round_rows
-        if not thr or self._pop_bound > thr:
+        if not thr or rnd.pop_bound > thr:
             yield
             return
         conf = self.spark.conf
@@ -1001,23 +972,19 @@ class CrawlEngine:
         old_sp = conf.get("spark.sql.shuffle.partitions")
         conf.set("spark.sql.adaptive.enabled", "false")
         # static width sized to the LARGEST frame any latency-round
-        # exchange carries — the selection bound (sites × prefix_k),
-        # not the pop bound, which is ~64× smaller: micro-rounds
-        # (equivalence tests, drain tails) run every exchange as ONE
-        # task — AQE's coalesce-to-1 without the per-stage submission
-        # latency; rounds whose selection frames reach 10^4-10^6 rows
-        # get 8-wide exchanges (measured at the frontier10m harness:
-        # a 2k-URL round over 16 sites has a ~257k-row prefix bound,
-        # and width 1 serialized the top-K kernel + admission window)
-        bound = self._pop_bound
-        if _LATENCY_WIDTH_FROM_SEL_BOUND:
-            bound = max(bound, getattr(self, "_sel_bound", 0))
-        # width 1 only for genuinely micro rounds (equivalence/drain
-        # tails): a few-thousand-pop round can still explode 10-20×
-        # that many LINKS through its dedup exchanges (round-6: the
-        # bench's 2.9k-pop round carries ~54k links), so the one-task
-        # tier now stops at 256
-        width = 1 if bound <= 256 else 8
+        # exchange carries — the selection bound, which is never below
+        # the pop bound: micro-rounds (equivalence tests, drain tails)
+        # run every exchange as ONE task — AQE's coalesce-to-1 without
+        # the per-stage submission latency; rounds whose selection
+        # frames reach 10^4-10^6 rows get 8-wide exchanges (a 2k-URL
+        # round over 16 sites has a ~257k-row prefix bound, and width 1
+        # serialized the top-K kernel + admission window; frontier10m
+        # 6-round total 126.0 → 120.2 s, round 5, median of 3).
+        # Width 1 only for genuinely micro rounds: a few-thousand-pop
+        # round can still explode 10-20× that many LINKS through its
+        # dedup exchanges (round-6: the bench's 2.9k-pop round carries
+        # ~54k links), so the one-task tier stops at 256
+        width = 1 if rnd.sel_bound <= 256 else 8
         conf.set("spark.sql.shuffle.partitions",
                  str(min(int(old_sp), width)))
         try:
@@ -1025,6 +992,76 @@ class CrawlEngine:
         finally:
             conf.set("spark.sql.adaptive.enabled", old_aqe)
             conf.set("spark.sql.shuffle.partitions", old_sp)
+
+    # ------------------------------------------------------ background jobs
+
+    def _submit(self, rnd: _Round, fn, *args, table: str | None = None,
+                advisory: bool = False) -> Future:
+        """Run ``fn(*args)`` on the engine's pool as one of the round's
+        background jobs; :meth:`_join_jobs` joins it at the barrier."""
+        if self._eager_pool is None:
+            self._eager_pool = ThreadPoolExecutor(max_workers=16)
+        fut = self._eager_pool.submit(fn, *args)
+        rnd.jobs.append(_Job(fut, table, advisory))
+        return fut
+
+    def _stage(self, rnd: _Round, table: str, df: DataFrame) -> None:
+        """Write a delta of ``table`` now, in the background: its job
+        overlaps the round's remaining planning and barrier actions, and
+        the barrier only joins it. The dir is an orphan until the
+        manifest commit, so crash semantics are those of a write at the
+        barrier. Concurrent first-materialization of a shared
+        persisted/localCheckpoint parent is BlockManager-locked.
+        Measured against holding every write to a barrier flush pool
+        (round 5, interleaved one-JVM median of 5, bench crawl_round):
+        51.0 s → 43.8 s."""
+        self._submit(rnd, self.catalog.stage, table, df, rnd.no, table=table)
+
+    def _stage_rows(self, rnd: _Round, table: str, rows: list[dict],
+                    schema) -> None:
+        """Driver-resident rows: direct pyarrow write, no Spark job."""
+        rnd.staged.setdefault(table, []).append(
+            self.catalog.stage_rows(table, rows, schema, rnd.no))
+
+    def _kick(self, rnd: _Round, df: DataFrame) -> None:
+        """Materialize ``df`` through a noop sink in the background
+        (guide §1.4), so its compute runs on the executors while the
+        driver plans the frames that read it. Advisory: the real
+        consumers of ``df`` surface any failure themselves."""
+        self._submit(rnd, lambda: df.write.format("noop")
+                     .mode("overwrite").save(), advisory=True)
+
+    def _join_jobs(self, rnd: _Round) -> None:
+        """Round barrier: wait for every background job and record each
+        staged dir in ``rnd.staged``. Staged writes and collects
+        re-raise; a failed noop kick is only logged, so an advisory job
+        can never abort a round whose real writes succeeded."""
+        for job in rnd.jobs:
+            if job.advisory:
+                exc = job.future.exception()
+                if exc is not None:
+                    log.warning("round %d: noop kick failed", rnd.no,
+                                exc_info=exc)
+                continue
+            out = job.future.result()
+            if job.table is not None:
+                rnd.staged.setdefault(job.table, []).append(out)
+        rnd.jobs.clear()
+
+    def _drain_jobs(self, rnd: _Round) -> None:
+        """Settle the jobs of an aborted round (a joined round has
+        none left): cancel those not yet started, wait for the running
+        ones, log their failures."""
+        for job in rnd.jobs:
+            job.future.cancel()
+        for job in rnd.jobs:
+            if job.future.cancelled():
+                continue
+            exc = job.future.exception()
+            if exc is not None:
+                log.warning("aborted round %d: background job failed",
+                            rnd.no, exc_info=exc)
+        rnd.jobs.clear()
 
     def _bc(self, df: DataFrame, est_rows: int | None) -> DataFrame:
         """Broadcast hint with a size guard (round-4 advisor item): the
@@ -1038,11 +1075,11 @@ class CrawlEngine:
             return df
         return F.broadcast(df)
 
-    def _persist_tmp(self, df: DataFrame) -> DataFrame:
-        """Persist a round-scoped frame (bucket-prune collects and the
-        plans they feed both read it); released at the round barrier."""
+    def _persist_tmp(self, rnd: _Round, df: DataFrame) -> DataFrame:
+        """Persist a round-scoped frame; released when the round ends,
+        committed or aborted."""
         df = df.persist()
-        self._round_tmp.append(df)
+        rnd.tmp.append(df)
         return df
 
     def _cut(self, df: DataFrame) -> DataFrame:
@@ -1065,7 +1102,7 @@ class CrawlEngine:
 
     # ---------------------------------------------------------- admission
 
-    def _admission_flags(self, cand: DataFrame) -> DataFrame:
+    def _admission_flags(self, rnd: _Round, cand: DataFrame) -> DataFrame:
         """F1-F7 pop-time admission chain (crawler.py:1157-1178), as
         columns. Order of precedence matches the reference's
         if/continue chain: visited-dup → excluded → extension → robots."""
@@ -1099,10 +1136,10 @@ class CrawlEngine:
         visited = self._visited_view()
         cand = cand.withColumn("url_hash", url_hash_col(F.col("url")))
         if visited is not None:
-            probed = self._persist_tmp(self._bloom_split(
-                cand.select("site", "counter", "url", "url_hash")))
+            probed = self._persist_tmp(rnd, self._bloom_split(
+                rnd, cand.select("site", "counter", "url", "url_hash")))
             maybe = probed.filter(F.col("_maybe"))
-            bound = getattr(self, "_prefix_bound", None)
+            bound = rnd.prefix_bound
             present = self._present_keys(
                 self._pruned("visited", visited, maybe, "url"),
                 maybe, ["site", "url"], est_rows=bound)
@@ -1121,7 +1158,7 @@ class CrawlEngine:
             ~F.col("f_visited") & ~F.col("f_excluded") & ~F.col("f_ext")
             & ~F.col("f_robots_denied"))
 
-    def _bloom_split(self, df: DataFrame) -> DataFrame:
+    def _bloom_split(self, rnd: _Round, df: DataFrame) -> DataFrame:
         """Adds boolean ``_maybe``: True iff the row's ``url_hash``
         might be in the visited Bloom. Definite negatives (the vast
         majority of discovered links) skip the exact anti-join shuffle.
@@ -1144,14 +1181,14 @@ class CrawlEngine:
         identical, rows just take the exact-check path. The Bloom
         DELTA maintenance below is unaffected — the filter stays
         current for the rounds where the corpus outgrows the floor."""
-        if getattr(self, "_bloom_probe_skip", False):
+        if not rnd.probe_bloom:
             return df.withColumn("_maybe", F.lit(True))
         P, bits, k = (self._bloom.num_partitions, self._bloom.bits,
                       self._bloom.k)
         out_schema = StructType(list(df.schema.fields)
                                 + [StructField("_maybe", BooleanType())])
-        if self._bloom_bc is not None:
-            parts = self._bloom_bc
+        if rnd.bloom_bc is not None:
+            parts = rnd.bloom_bc
 
             def probe(batches):
                 bloom = PartitionedBloom(P, bits, k)
@@ -1165,7 +1202,7 @@ class CrawlEngine:
                         yield pdf.assign(_maybe=pd.Series(dtype=bool))
 
             return df.mapInPandas(probe, schema=out_schema)
-        if self._bloom_table is None:
+        if rnd.bloom_table is None:
             return df.withColumn("_maybe", F.lit(False))
         cols = list(df.columns)
 
@@ -1182,10 +1219,11 @@ class CrawlEngine:
         probe = df.withColumn(
             "_pid", F.pmod(F.col("url_hash"), F.lit(P)).cast("int"))
         return (probe.groupBy("_pid")
-                .cogroup(self._bloom_table.select("pid", "bits").groupBy("pid"))
+                .cogroup(rnd.bloom_table.select("pid", "bits").groupBy("pid"))
                 .applyInPandas(check_fn, schema=out_schema))
 
-    def _select_pops(self, budgets: dict[str, int]) -> DataFrame | None:
+    def _select_pops(self, rnd: _Round,
+                     budgets: dict[str, int]) -> DataFrame | None:
         """Pop cutoff with candidate-prefix escalation. Returns the
         popped rows with admission flags + pos_in_round, or None when
         the frontier is empty for every active site.
@@ -1205,19 +1243,13 @@ class CrawlEngine:
         budget_df = self.spark.createDataFrame(
             list(budgets.items()), schema="site string, _budget int")
         while True:
-            # every frame this iteration persists lands in _round_tmp at
+            # every frame this iteration persists lands in rnd.tmp at
             # or after this index; an escalation retry releases them
             # immediately instead of holding superseded prefix/probe/
             # admission copies in executor storage until the barrier
-            it_tmp = len(self._round_tmp)
-            if _FRONTIER_SIZE_BOUNDS:
-                # per-site prefix rows ≤ min(prefix_k, live frontier)
-                self._prefix_bound = sum(
-                    prefix_k if self.sites[s].frontier_rows is None
-                    else min(prefix_k, self.sites[s].frontier_rows)
-                    for s in budgets)
-            else:
-                self._prefix_bound = len(budgets) * prefix_k
+            it_tmp = len(rnd.tmp)
+            rnd.prefix_bound = sum(self._frontier_cap(s, prefix_k)
+                                   for s in budgets)
             frontier = self._pop_frontier(budgets, prefix_k)
             if frontier is None:
                 return None
@@ -1227,13 +1259,12 @@ class CrawlEngine:
             # tracked frontier under the latency threshold) skip the
             # two Arrow top-K passes — the rank window alone is exact
             # and two Python-stage round-trips cheaper (guide §4).
-            small = (_FRONTIER_SIZE_BOUNDS and all(
-                self.sites[s].frontier_rows is not None for s in budgets)
-                and sum(self.sites[s].frontier_rows for s in budgets)
-                <= (self.cfg.latency_round_rows or 0))
+            sizes = [self.sites[s].frontier_rows for s in budgets]
+            small = (None not in sizes
+                     and sum(sizes) <= (self.cfg.latency_round_rows or 0))
             prefix = self._persist_tmp(
-                candidate_prefix(frontier, prefix_k, small=small))
-            cand = self._admission_flags(prefix)
+                rnd, candidate_prefix(frontier, prefix_k, small=small))
+            cand = self._admission_flags(rnd, prefix)
             if self.cfg.host_budget is not None:
                 # politeness: over-budget rows stay in the frontier
                 wh = Window.partitionBy("site", "host").orderBy(*order)
@@ -1249,45 +1280,35 @@ class CrawlEngine:
             # admission flags (Bloom probe + windows) feed the cutoff,
             # the stats collect, and every downstream consumer — persist
             # once; the stats collect materializes it
-            cand = self._persist_tmp(cand)
+            cand = self._persist_tmp(rnd, cand)
             pop_cond = (F.when(F.col("admissible"), F.col("_adm_run") <= budget)
                         .otherwise(F.col("_adm_run") < budget))
             # n_rank comes from the UNFILTERED prefix (the host-budget
             # filter may drop the last-ranked row from cand, which must
             # not mask a full prefix); n_adm from the admission frame.
-            # Round-6: when every budget site's tracked live frontier
-            # is provably SMALLER than prefix_k, no site can fill its
-            # prefix (n_rank ≤ frontier_rows < prefix_k), so escalation
-            # is impossible and the stats collect — one driver-blocking
+            # When every budget site's tracked live frontier is provably
+            # SMALLER than prefix_k, no site can fill its prefix
+            # (n_rank ≤ frontier_rows < prefix_k), so escalation is
+            # impossible and the stats collect — one driver-blocking
             # job per round, serialized before the fetch — buys
             # nothing. Skip it: the popped checkpoint then materializes
-            # inside the round's first eager job (crawl_log write /
-            # fetch kick) instead of its own synchronous action. Sites
-            # with untracked sizes (None) keep the stats path; a
-            # retirement-emptied budgets dict never reaches here.
-            if (_ESCALATION_STATS_SKIP and _FRONTIER_SIZE_BOUNDS and all(
-                    self.sites[s].frontier_rows is not None
-                    and self.sites[s].frontier_rows < prefix_k
-                    for s in budgets)):
+            # inside the round's first background job instead (round 6,
+            # 10 interleaved pairs on the bench crawl: median pairwise
+            # delta −1.5 s). Sites with untracked sizes (None) keep the
+            # stats path; a retirement-emptied budgets dict never
+            # reaches here.
+            if all(rows is not None and rows < prefix_k for rows in sizes):
                 stats = under = None
                 # with no stats collect, nothing runs on the executors
                 # while the driver plans the popped checkpoint and the
-                # early _execute_round frames (§2.6 overlap): kick an
-                # async noop materialization of the persisted admission
-                # frame — the exact compute every downstream job needs
-                # first — so the selection pipeline (windows, Bloom
-                # probe, robots UDF) executes concurrently with that
-                # planning. Joined at the round barrier; a failure
-                # re-raises identically in the real consumers.
-                if _PRESEL_KICK and self.cfg.eager_stage:
-                    if self._eager_pool is None:
-                        from concurrent.futures import ThreadPoolExecutor
-
-                        self._eager_pool = ThreadPoolExecutor(max_workers=16)
-                    cand_f = cand
-                    self._presel_futs.append(self._eager_pool.submit(
-                        lambda: cand_f.write.format("noop")
-                        .mode("overwrite").save()))
+                # early _execute_round frames (§2.6 overlap): kick the
+                # persisted admission frame — the exact compute every
+                # downstream job needs first — so the selection
+                # pipeline (windows, Bloom probe, robots UDF) executes
+                # concurrently with that planning (round 6: 5 of 6
+                # interleaved pairs favor the kick, median pairwise
+                # delta −0.35 s).
+                self._kick(rnd, cand)
             else:
                 stats = {r["site"]: (r["n_adm"], r["n_rank"]) for r in
                          prefix.groupBy("site").agg(F.max("_rank").alias("n_rank"))
@@ -1310,83 +1331,28 @@ class CrawlEngine:
                 # Cut only on the accepted iteration, so escalation
                 # never abandons a materialized checkpoint.
                 return self._cut(popped)
-            for df in self._round_tmp[it_tmp:]:
+            for df in rnd.tmp[it_tmp:]:
                 df.unpersist()
-            del self._round_tmp[it_tmp:]
+            del rnd.tmp[it_tmp:]
             prefix_k *= 8
 
     # ---------------------------------------------------------- execution
 
-    def _execute_round(self, popped: DataFrame, now: float) -> bool:
+    def _execute_round(self, rnd: _Round, popped: DataFrame) -> bool:
+        """Fetch, index, push and commit the popped rows. Each phase
+        submits its writes and collects as background jobs (see
+        :meth:`_stage`); the commit phase is the barrier."""
+        fetched = self._fetch_phase(rnd, popped)
+        indexed, intra304, intra_skip = self._index_phase(rnd, fetched)
+        fut_delta, fut_metrics = self._side_jobs_phase(
+            rnd, popped, fetched, indexed, intra304, intra_skip)
+        adds = self._push_phase(rnd, popped, fetched, intra304)
+        return self._commit_phase(rnd, adds, fut_delta, fut_metrics)
+
+    def _fetch_phase(self, rnd: _Round, popped: DataFrame) -> DataFrame:
+        """crawl_log, conditional-GET headers, and the fetch+parse of
+        the admitted rows (kicked off at once)."""
         cfg = self.cfg
-        rno = self.round_no
-        # staging is deferred and written through a thread pool at the
-        # round barrier: ~10 small table writes per round each carry
-        # fixed job overhead, and every parent frame is persisted and
-        # already materialized by the metrics collect, so the parallel
-        # writes only read cache — wall time ≈ max, not sum (the main
-        # driver of small-round orchestration cost)
-        pending: list[tuple[str, DataFrame]] = []
-        pre_staged: dict[str, list[str]] = {}
-        # eager mode: each staged write is submitted the moment it is
-        # declared — its job overlaps the round's remaining barrier
-        # actions (bucket-prune collect, link count, metrics rollup)
-        # and the barrier flush only joins futures. Concurrent
-        # first-materialization of a shared persisted/localCheckpoint
-        # parent is BlockManager-locked (the barrier already overlaps
-        # the metrics and Bloom collects the same way).
-        eager_pool = None
-        eager_futs: list[tuple[str, object]] = []
-        if cfg.eager_stage:
-            # one pool per ENGINE, reused across rounds (threads spawn
-            # lazily and idle between rounds; a fresh 16-thread pool
-            # per round was pure churn — round-5 verdict minor #3)
-            if self._eager_pool is None:
-                from concurrent.futures import ThreadPoolExecutor
-
-                self._eager_pool = ThreadPoolExecutor(max_workers=16)
-            eager_pool = self._eager_pool
-
-        def stage(table: str, df: DataFrame):
-            if eager_pool is not None:
-                eager_futs.append(
-                    (table, eager_pool.submit(self.catalog.stage, table,
-                                              df, rno)))
-            else:
-                pending.append((table, df))
-
-        def stage_rows(table: str, rows: list[dict], schema) -> None:
-            # driver-resident rows: direct pyarrow write, no Spark job
-            pre_staged.setdefault(table, []).append(
-                self.catalog.stage_rows(table, rows, schema, rno))
-
-        def _flush_stages() -> dict[str, list[str]]:
-            from concurrent.futures import ThreadPoolExecutor
-
-            staged: dict[str, list[str]] = {k: list(v)
-                                            for k, v in pre_staged.items()}
-            if eager_pool is not None:
-                # join futures only — the engine-owned pool outlives
-                # the round
-                for t, fut in eager_futs:
-                    staged.setdefault(t, []).append(fut.result())
-                for fut in kick_futs:
-                    fut.result()
-                for fut in self._presel_futs:
-                    fut.result()
-                self._presel_futs = []
-                return staged
-            # one thread per staged table: each write is a small job
-            # over cached parents, so the flush wall is the slowest
-            # write, not the sum (pool-summed ~5 s/round at the
-            # frontier10m harness with the old 8-thread cap)
-            with ThreadPoolExecutor(max_workers=max(len(pending), 1)) as ex:
-                futures = [(t, ex.submit(self.catalog.stage, t, df, rno))
-                           for t, df in pending]
-                for t, fut in futures:
-                    staged.setdefault(t, []).append(fut.result())
-            return staged
-
         # crawl_log: the ordering-equivalence artifact (FIXTURES.md §7)
         log_action = (
             F.when(F.col("admissible"), "admitted")
@@ -1394,17 +1360,17 @@ class CrawlEngine:
             .when(F.col("f_excluded"), "excluded")
             .when(F.col("f_ext"), "ext_skipped")
             .otherwise("robots_denied"))
-        stage("crawl_log", popped.select(
+        self._stage(rnd, "crawl_log", popped.select(
             "site", "url", "depth", "counter", "pos_in_round",
-            log_action.alias("action"), F.lit(rno).alias("round")))
+            log_action.alias("action"), F.lit(rnd.no).alias("round")))
 
         admitted = popped.filter(F.col("admissible"))
-
         # conditional-GET headers from the cache, keyed by requested URL
         # (crawler.py:974-979). The seen-log read is key-pruned to this
         # round's admitted set (popped is already materialized) — no
         # full-log window per round.
-        seen_cond = self._seen_for(admitted.select("url"))
+        seen_cond = self._seen_for(admitted.select("url"), "url",
+                                   rnd.pop_bound)
         if seen_cond is not None:
             # bounded by the round's admitted keys — hint for the
             # static (latency-mode) compile
@@ -1413,7 +1379,7 @@ class CrawlEngine:
                     F.col("url"),
                     F.col("etag").alias("cached_etag"),
                     F.col("last_modified").alias("cached_last_modified")),
-                    self._pop_bound),
+                    rnd.pop_bound),
                 "url", "left")
         else:
             admitted = (admitted
@@ -1430,34 +1396,35 @@ class CrawlEngine:
             .repartition(cfg.shuffle_partitions, F.xxhash64(F.col("host"), salt))
             .mapInPandas(self._fetch_udf, schema=FETCH_SCHEMA)
         )
-        # kick the fetch NOW (noop sink, guide §1.4): the checkpoint
-        # materializes on its first action, which otherwise is the
-        # eager documents write — submitted only after ~0.5-1 s of
-        # driver-side plan construction (seen join, indexing decision,
-        # doc projection). The round's dominant real work starts
-        # before that instead of after; every later consumer reads the
-        # stored checkpoint blocks. One extra no-op job (~0.15 s)
-        # buys the overlap; failure surfacing is unchanged (the write
-        # that shares the checkpoint re-raises the same error, and the
-        # future is joined at the barrier).
-        kick_futs: list = []
-        if eager_pool is not None:
-            kick_futs.append(eager_pool.submit(
-                lambda: fetched.write.format("noop")
-                .mode("overwrite").save()))
-        # ---- indexing decision (crawler.py:1033-1058) ----
+        # kick the fetch NOW: the checkpoint materializes on its first
+        # action, which otherwise is the documents write — submitted
+        # only after ~0.5-1 s of driver-side plan construction (seen
+        # join, indexing decision, doc projection). The round's
+        # dominant real work starts before that instead of after;
+        # every later consumer reads the stored checkpoint blocks. One
+        # extra no-op job (~0.15 s) buys the overlap.
+        self._kick(rnd, fetched)
+        return fetched
+
+    def _index_phase(self, rnd: _Round, fetched: DataFrame
+                     ) -> tuple[DataFrame, DataFrame, DataFrame]:
+        """Indexing decision (crawler.py:1033-1058) and the intra-round
+        304/skip effects; stages documents, url_seen_log and
+        refreshes. Returns ``(indexed, intra304, intra_skip)``."""
+        cfg, now, rno = self.cfg, rnd.now, rnd.no
         ok = fetched.filter(F.col("fetch_status") == 200)
         # seen-log lookup keyed by final URL, pruned to this round's
         # fetched set (the bucket collect materializes the persisted
         # fetch once — same total work, earlier)
-        seen_final = self._seen_for(ok.select("final_url"), "final_url")
+        seen_final = self._seen_for(ok.select("final_url"), "final_url",
+                                    rnd.pop_bound)
         if seen_final is not None:
             ok = ok.join(
                 self._bc(seen_final.select(
                     F.col("url").alias("final_url"),
                     F.col("content_hash").alias("seen_hash"),
                     F.col("last_crawl").alias("seen_last_crawl")),
-                    self._pop_bound),
+                    rnd.pop_bound),
                 "final_url", "left")
         else:
             ok = ok.withColumn("seen_hash", F.lit(None).cast("string")) \
@@ -1489,10 +1456,10 @@ class CrawlEngine:
                 F.broadcast(seen_hashes),
                 ["site", "content_hash"], "left_anti")
         wdup = Window.partitionBy("site", "content_hash").orderBy("pos_in_round")
-        indexed = (candidates
-                   .withColumn("_dup_rn", F.row_number().over(wdup))
-                   .filter(F.col("_dup_rn") == 1).drop("_dup_rn"))
-        indexed.persist()
+        indexed = self._persist_tmp(rnd, (
+            candidates
+            .withColumn("_dup_rn", F.row_number().over(wdup))
+            .filter(F.col("_dup_rn") == 1).drop("_dup_rn")))
 
         # ---- intra-round cache effects ----------------------------
         # The reference updates the cache sequentially *within* a
@@ -1525,23 +1492,22 @@ class CrawlEngine:
             F.col("_stored_lm").isNotNull()
             & F.col("last_modified").isNotNull()
             & (F.col("_stored_lm") == F.col("last_modified")))
-        intra304 = (
+        intra304 = self._persist_tmp(rnd, (
             ok.join(self._bc(first_indexed
                              .select("site", F.col("final_url").alias("url"),
                                      "_first_pos", "_stored_etag",
-                                     "_stored_lm"), self._pop_bound),
+                                     "_stored_lm"), rnd.pop_bound),
                     ["site", "url"])
             .filter((F.col("_first_pos") < F.col("pos_in_round"))
                     & validators_match)
             .select("site", "url", "pos_in_round",
-                    F.md5(F.col("url")).alias("refresh_id")))
-        intra304.persist()
+                    F.md5(F.col("url")).alias("refresh_id"))))
         intra_skip = (
             ok.join(self._bc(intra304.select(
                 "site", "pos_in_round").withColumn("_is304", F.lit(True)),
-                self._pop_bound),
+                rnd.pop_bound),
                 ["site", "pos_in_round"], "left")
-            .join(self._bc(first_indexed, self._pop_bound),
+            .join(self._bc(first_indexed, rnd.pop_bound),
                   ["site", "final_url"], "left")
             .withColumn("f_cache_skip_final",
                         F.col("f_cache_skip")
@@ -1557,18 +1523,17 @@ class CrawlEngine:
             "lang", F.lit(int(now)).alias("timestamp"),
             F.lit(now).alias("indexed_at"), F.lit(now).alias("last_crawled_at"),
             "content_hash", F.lit(rno).alias("round"))
-        stage("documents", docs)
-        nb = self.cfg.seen_buckets
+        self._stage(rnd, "documents", docs)
         # no content_hashes delta: the url_seen_log delta below is a
         # projection of the SAME ``indexed`` frame, and
         # _content_hashes_view derives (site, content_hash, round,
         # bucket) back from its post-floor delta dirs — one fewer
         # staged write job per round (round-5 write-merge)
-        stage("url_seen_log", indexed.select(
+        self._stage(rnd, "url_seen_log", indexed.select(
             F.col("final_url").alias("url"), "content_hash", "doc_id",
             F.lit(now).alias("last_crawl"), "etag", "last_modified",
             "site", F.lit(rno).alias("round"),
-            bucket_col(F.col("final_url"), nb).alias("bucket")))
+            bucket_col(F.col("final_url"), cfg.seen_buckets).alias("bucket")))
 
         refreshes = fetched.filter(F.col("fetch_status") == 304).select(
             F.col("doc_id").alias("id"), F.lit(now).alias("last_crawled_at"),
@@ -1576,37 +1541,41 @@ class CrawlEngine:
         refreshes = refreshes.unionByName(intra304.select(
             F.col("refresh_id").alias("id"),
             F.lit(now).alias("last_crawled_at"), F.lit(rno).alias("round")))
-        stage("refreshes", refreshes)
+        self._stage(rnd, "refreshes", refreshes)
+        return indexed, intra304, intra_skip
 
+    def _side_jobs_phase(self, rnd: _Round, popped: DataFrame,
+                         fetched: DataFrame, indexed: DataFrame,
+                         intra304: DataFrame, intra_skip: DataFrame
+                         ) -> tuple[Future | None, Future]:
+        """Jobs that depend only on frames that exist before link
+        discovery — the Bloom delta, the metrics head and the lineage
+        write — submitted now, so they overlap the link-dedup work
+        instead of serializing at the barrier. Returns the futures of
+        the Bloom delta collect (broadcast mode; None in cogroup mode)
+        and of the metrics head collect."""
+        rno = rnd.no
         # ---- visited additions: every batch member + ext-skips
         # (crawler.py:1168-1173, 1185-1187). Pop-time precedence is
         # visited → excluded → extension (crawler.py:1163-1173): an
         # excluded URL `continue`s BEFORE the extension check, so a
         # URL that is both excluded and extension-suffixed is never
         # marked visited (it may be re-pushed on rediscovery).
+        # No visited delta is staged: crawl_log actions
+        # admitted/ext_skipped ARE marks_visited, and _visited_view
+        # derives these rows back (round-5 write-merge); new_visited
+        # only feeds the Bloom delta.
         marks_visited = F.col("admissible") | (
             F.col("f_ext") & ~F.col("f_visited") & ~F.col("f_excluded"))
-        new_visited = (
-            popped.filter(marks_visited)
-            .select("site", "url", "url_hash")
-            .withColumn("round", F.lit(rno)))
-        # no visited delta: crawl_log actions admitted/ext_skipped ARE
-        # marks_visited, and _visited_view derives these rows back from
-        # its post-floor delta dirs (round-5 write-merge); new_visited
-        # still feeds the Bloom delta below
+        new_visited = popped.filter(marks_visited).select("url_hash")
 
         # ---- executor-side Bloom deltas (never collect url_hashes:
         # at 10^6-10^7 visited/round that collect is a driver choke
         # point; the per-partition bitmap deltas are bounded by
         # P × bits/8 regardless of row count) ----
-        # Round-6: the delta depends ONLY on popped (via new_visited),
-        # so in broadcast mode its collect is submitted HERE — before
-        # the link-dedup/metrics plans are even built — and its job
-        # overlaps the round's fetch + link work instead of serializing
-        # with the metrics rollup at the barrier (guide §2.6: overlap
-        # independent jobs; concurrent first-materialization of the
-        # popped checkpoint is BlockManager-locked, the same safety the
-        # eager staged writes rely on).
+        # The delta depends ONLY on popped, so its collect overlaps
+        # the round's fetch + link work (profiled: 1.4-1.7 s →
+        # 0.35-0.47 s of barrier time, round 6).
         bits, k = self._bloom.bits, self._bloom.k
         P = self._bloom.num_partitions
 
@@ -1634,18 +1603,11 @@ class CrawlEngine:
                     .applyInPandas(build_delta, schema="pid int, bits binary"))
         fut_delta = None
         if self.cfg.bloom_probe_mode == "broadcast":
-            if eager_pool is not None:
-                fut_delta = eager_pool.submit(delta_df.collect)
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                _delta_pool = ThreadPoolExecutor(max_workers=1)
-                fut_delta = _delta_pool.submit(delta_df.collect)
-                _delta_pool.shutdown(wait=False)
+            fut_delta = self._submit(rnd, delta_df.collect)
         else:
             # table mode: merge executor-side (broadcast join on the
             # ≤P-row parts view); no bitmap ever reaches the driver
-            prev = self._bloom_table
+            prev = rnd.bloom_table
             if prev is not None:
                 joined = (delta_df.alias("d")
                           .join(F.broadcast(prev.select(
@@ -1668,14 +1630,13 @@ class CrawlEngine:
                                             schema="pid int, bits binary")
             else:
                 merged = delta_df
-            stage("bloom_parts", merged.withColumn("round", F.lit(rno)))
+            self._stage(rnd, "bloom_parts",
+                        merged.withColumn("round", F.lit(rno)))
 
         # ---- metrics, adds-independent components (A2/A3) ----
-        # Round-6: four of the five metrics components depend only on
-        # frames that exist BEFORE link discovery (fetched / popped /
-        # indexed / intra-round skips) — their rollup is submitted
-        # here so its job overlaps the link-dedup work, and only the
-        # pushed count (over the final adds) stays at the barrier.
+        # four of the five metrics components depend only on frames
+        # that exist before link discovery; only the pushed count
+        # (over the final adds) stays at the barrier.
         action = (
             F.when(F.col("fetch_status") == -1, "error")
             .when((F.col("fetch_status") == 304) | F.col("_is304").isNotNull(),
@@ -1685,7 +1646,7 @@ class CrawlEngine:
         fetch_counts = (
             fetched.join(self._bc(intra304.select(
                 "site", "pos_in_round").withColumn("_is304", F.lit(True)),
-                self._pop_bound),
+                rnd.pop_bound),
                 ["site", "pos_in_round"], "left")
             .groupBy("site", action.alias("action")).count())
         skip_counts = popped.filter(~F.col("admissible")).groupBy(
@@ -1703,10 +1664,8 @@ class CrawlEngine:
             .select("site", "action", "count")
         metrics_head = (fetch_counts.unionByName(skip_counts)
                         .unionByName(idx_counts)
-                        .unionByName(cache_skip_counts)
-                        .withColumn("round", F.lit(rno)))
-        fut_metrics = (eager_pool.submit(metrics_head.collect)
-                       if eager_pool is not None else None)
+                        .unionByName(cache_skip_counts))
+        fut_metrics = self._submit(rnd, metrics_head.collect)
         # lineage (S9) depends only on the fetched frame — stage it
         # here so its write overlaps the link-dedup stats job instead
         # of queueing behind the whole adds pipeline
@@ -1716,22 +1675,28 @@ class CrawlEngine:
                         F.sum(F.length(F.coalesce("content", F.lit(""))))
                         .alias("bytes_content"))
                    .withColumn("round", F.lit(rno)))
-        stage("lineage", lineage)
+        self._stage(rnd, "lineage", lineage)
+        return fut_delta, fut_metrics
 
-        # ---- link discovery + frontier push (crawler.py:1203-1208) ----
+    def _push_phase(self, rnd: _Round, popped: DataFrame,
+                    fetched: DataFrame, intra304: DataFrame) -> DataFrame:
+        """Link discovery + frontier push (crawler.py:1203-1208):
+        dedup, counter assignment in insertion order, the queue cap.
+        Stages frontier_adds and returns the persisted adds."""
+        cfg = self.cfg
         links = (
             fetched.filter((F.col("fetch_status") == 200) & F.col("links").isNotNull())
             .join(self._bc(intra304.select("site", "pos_in_round"),
-                           self._pop_bound),
+                           rnd.pop_bound),
                   ["site", "pos_in_round"], "left_anti")
             .select("site", "pos_in_round",
                     (F.col("depth") + 1).alias("link_depth"),
                     F.posexplode("links").alias("link_pos", "link_url")))
-        new_links = self._dedup_links(links, popped)
+        new_links = self._dedup_links(rnd, links, popped)
         if cfg.max_queue_size is not None:
             # the cap path evaluates new_links twice (per-page
             # rollup + kept rows) — cache the dedup subtree
-            new_links = new_links.persist()
+            new_links = self._persist_tmp(rnd, new_links)
 
         # counter assignment in insertion order (crawler.py:1206-1207);
         # per-site counter bases join in as broadcast data (O(1) plan)
@@ -1743,95 +1708,83 @@ class CrawlEngine:
                         F.col("host"), F.col("link_depth").alias("depth"),
                         (F.coalesce(F.col("_base"), F.lit(0))
                          + F.col("_idx")).cast("long").alias("counter"))
-                .withColumn("bucket", bucket_col(F.col("url"), nb)))
+                .withColumn("bucket", bucket_col(F.col("url"),
+                                                 cfg.seen_buckets)))
         if cfg.max_queue_size is not None:
             adds = self._apply_queue_cap(adds, new_links, popped)
-        adds = adds.persist()
-        stage("frontier_adds", adds)
-        # no frontier_pops delta: crawl_log (staged above) carries
-        # site/counter/round for every popped row, and _pops_view reads
-        # it back with manifest-level round pruning — one fewer staged
-        # write job per round for byte-identical anti-join semantics
+        adds = self._persist_tmp(rnd, adds)
+        # no frontier_pops delta: crawl_log carries site/counter/round
+        # for every popped row, and _pops_view reads it back with
+        # manifest-level round pruning
+        self._stage(rnd, "frontier_adds", adds)
+        return adds
 
-        # ---- metrics tail (pushed) ----
+    def _commit_phase(self, rnd: _Round, adds: DataFrame,
+                      fut_delta: Future | None, fut_metrics: Future) -> bool:
+        """Round barrier: the metrics rows and the Bloom delta (both
+        usually done by now), the driver state, the join of every
+        background job and the atomic commit. Returns whether any site
+        popped or pushed."""
+        import pyarrow as pa
+
+        rno = rnd.no
         pushed_counts = (adds.groupBy("site")
                          .agg(F.count("*").alias("count"))
                          .withColumn("action", F.lit("pushed"))
-                         .select("site", "action", "count")
-                         .withColumn("round", F.lit(rno)))
-
-        # ---- barrier: metrics rollup + the early-submitted Bloom
-        # delta (broadcast mode; its job has been running since the
-        # visited section — by now it is usually done) ----
-        if fut_metrics is not None:
-            metrics_rows = fut_metrics.result() + pushed_counts.collect()
-        else:
-            metrics_rows = metrics_head.unionByName(pushed_counts).collect()
-        if fut_delta is not None:
-            delta_rows = fut_delta.result()
-            if delta_rows:
-                for r in delta_rows:
-                    self._bloom.or_delta(r["pid"], r["bits"])
-                import pyarrow as pa
-
-                stage_rows(
-                    "bloom_parts",
-                    [{"pid": int(r["pid"]),
-                      "bits": self._bloom.parts[int(r["pid"])].tobytes(),
-                      "round": rno} for r in delta_rows],
-                    pa.schema([("pid", pa.int32()), ("bits", pa.binary()),
-                               ("round", pa.int32())]))
-
-        if metrics_rows:
-            import pyarrow as pa
-
-            stage_rows(
-                "metrics",
-                [{"site": r["site"], "action": r["action"],
-                  "count": int(r["count"]), "round": rno}
-                 for r in metrics_rows],
-                pa.schema([("site", pa.string()), ("action", pa.string()),
-                           ("count", pa.int64()), ("round", pa.int32())]))
-        else:
-            stage("metrics", metrics_head.unionByName(pushed_counts))
+                         .select("site", "action", "count"))
+        metrics_rows = fut_metrics.result() + pushed_counts.collect()
+        delta_rows = fut_delta.result() if fut_delta is not None else []
+        # every job joins before the engine's state moves (Bloom bits,
+        # site counters), so a failed round leaves it untouched
+        self._join_jobs(rnd)
+        if delta_rows:
+            for r in delta_rows:
+                self._bloom.or_delta(r["pid"], r["bits"])
+            self._stage_rows(
+                rnd, "bloom_parts",
+                [{"pid": int(r["pid"]),
+                  "bits": self._bloom.parts[int(r["pid"])].tobytes(),
+                  "round": rno} for r in delta_rows],
+                pa.schema([("pid", pa.int32()), ("bits", pa.binary()),
+                           ("round", pa.int32())]))
+        self._stage_rows(
+            rnd, "metrics",
+            [{"site": r["site"], "action": r["action"],
+              "count": int(r["count"]), "round": rno}
+             for r in metrics_rows],
+            pa.schema([("site", pa.string()), ("action", pa.string()),
+                       ("count", pa.int64()), ("round", pa.int32())]))
 
         # ---- driver state ----
-        per_site_fetch = {}
+        per_site = {}
         for row in metrics_rows:
-            per_site_fetch.setdefault(row["site"], {})[row["action"]] = row["count"]
-        new_link_counts = {s: a.get("pushed", 0)
-                           for s, a in per_site_fetch.items()}
-
+            per_site.setdefault(row["site"], {})[row["action"]] = row["count"]
         any_pop = False
         for name, st in self.sites.items():
-            counts = per_site_fetch.get(name, {})
-            fetched_n = sum(counts.get(a, 0) for a in
-                            ("fetched", "not_modified", "not_indexed_content_type"))
-            st.pages_visited += fetched_n
-            st.url_counter += new_link_counts.get(name, 0)
+            counts = per_site.get(name, {})
+            pushed = counts.get("pushed", 0)
+            st.pages_visited += sum(counts.get(a, 0) for a in
+                                    ("fetched", "not_modified",
+                                     "not_indexed_content_type"))
+            st.url_counter += pushed
             pops = sum(counts.get(a, 0) for a in _POP_ACTIONS)
             st.pops_since_compact += pops
             if st.frontier_rows is not None:
                 # exact live-frontier size: + pushed − popped (every
                 # popped row is counted exactly once in _POP_ACTIONS;
                 # 'pushed' counts the post-dedup/post-cap adds rows)
-                st.frontier_rows += new_link_counts.get(name, 0) - pops
+                st.frontier_rows += pushed - pops
                 if st.frontier_rows < 0:
                     # impossible through the engine — a harness staged
                     # frontier rows out-of-band (direct catalog
                     # surgery). Tracking is stale: fall back to
                     # unknown so no bound or retirement trusts it.
                     st.frontier_rows = None
-            if counts or new_link_counts.get(name):
+            if counts:
                 any_pop = True
 
         self.round_no += 1
-        self.catalog.commit_round(rno, _flush_stages(), self._state_dict())
-        indexed.unpersist()
-        intra304.unpersist()
-        adds.unpersist()
-        if cfg.max_queue_size is not None:
-            new_links.unpersist()
+        self.catalog.commit_round(rno, rnd.staged, self._state_dict())
         return any_pop
 
     def _bucket_layout(self, df: DataFrame, order_key: str) -> DataFrame:
@@ -1868,8 +1821,6 @@ class CrawlEngine:
         production scale these are corpus-sized shuffles and running
         all of them at once trades straggler overlap against peak
         execution-memory/spill pressure."""
-        from concurrent.futures import ThreadPoolExecutor
-
         live = self._live_frontier()
         if live is not None:
             live = live.persist()
@@ -1954,7 +1905,8 @@ class CrawlEngine:
         if bloom is not None:
             self.catalog.commit_compact("bloom_parts", done["bloom_parts"])
 
-    def _dedup_links(self, links: DataFrame, popped: DataFrame) -> DataFrame:
+    def _dedup_links(self, rnd: _Round, links: DataFrame,
+                     popped: DataFrame) -> DataFrame:
         """Push-time dedup (crawler.py:1205): drop links already visited
         (incl. this round's batch members), already in the live
         frontier, or duplicated within this round (first occurrence by
@@ -1973,7 +1925,7 @@ class CrawlEngine:
                                    | (F.col("f_ext") & ~F.col("f_visited")
                                       & ~F.col("f_excluded")))
                      .select("site", F.col("url").alias("link_url")),
-                     getattr(self, "_pop_bound", None)),
+                     rnd.pop_bound),
             ["site", "link_url"], "left_anti")
         # vs historical visited (Bloom prefilter → exact membership):
         # the exact check scans visited bucket-pruned with the maybe-set
@@ -1985,7 +1937,7 @@ class CrawlEngine:
         bexpr = bucket_col(F.col("link_url"), self.cfg.seen_buckets)
         if visited is not None:
             links = links.withColumn("url_hash", url_hash_col(F.col("link_url")))
-            probed = self._persist_tmp(self._bloom_split(links))
+            probed = self._persist_tmp(rnd, self._bloom_split(rnd, links))
             # ONE action returns the round link count (gates every
             # forced-broadcast hint below — advisor item: an unguarded
             # hint on a 10^7-link round would OOM) AND the links'
@@ -2029,7 +1981,7 @@ class CrawlEngine:
             idx, idx_name = adds_comp, "frontier_adds"
         parts = [p for p in (idx, adds_deltas) if p is not None]
         if parts:
-            links = self._persist_tmp(links)
+            links = self._persist_tmp(rnd, links)
             if n_links is None:
                 # no visited table yet: same one-action fold (count +
                 # bucket set) over the persisted link frame
@@ -2057,7 +2009,7 @@ class CrawlEngine:
             still_queued = (
                 still_queued
                 .join(self._bc(popped.select("site", "counter"),
-                               getattr(self, "_pop_bound", None)),
+                               rnd.pop_bound),
                       ["site", "counter"], "left_anti")
                 .select("site", F.col("url").alias("link_url")).distinct())
             links = links.join(self._bc(still_queued, n_links),
@@ -2070,8 +2022,6 @@ class CrawlEngine:
         pushed only if the frontier is under the cap at that page's
         turn. Sequential recurrence over per-page counts — tiny
         driver-side array, only when a cap is configured."""
-        from concurrent.futures import ThreadPoolExecutor
-
         cap = self.cfg.max_queue_size
         live = self._live_frontier()
         # three independent tiny rollups — overlap their job overhead

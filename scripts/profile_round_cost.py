@@ -37,7 +37,15 @@ REPEAT = int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT", "5"))
 
 CUT_TIMES: list[float] = []
 _ORIG_CUT = crawler_mod.CrawlEngine._cut
+_ORIG_LATENCY = crawler_mod.CrawlEngine._latency_mode
 MODE = {"static": False}
+POP_BOUND = {"rows": 1}
+
+
+def noting_latency(self, rnd):
+    # the round's popped-row bound, for the static cut width below
+    POP_BOUND["rows"] = rnd.pop_bound
+    return _ORIG_LATENCY(self, rnd)
 
 
 def timed_cut(self, df):
@@ -46,7 +54,7 @@ def timed_cut(self, df):
         sp = self.spark
         old_aqe = sp.conf.get("spark.sql.adaptive.enabled")
         old_sp = sp.conf.get("spark.sql.shuffle.partitions")
-        bound = getattr(self, "_pop_bound", None) or 1
+        bound = POP_BOUND["rows"] or 1
         width = max(1, min(int(old_sp), bound // 4000 + 1))
         sp.conf.set("spark.sql.adaptive.enabled", "false")
         sp.conf.set("spark.sql.shuffle.partitions", str(width))
@@ -63,6 +71,7 @@ def timed_cut(self, df):
 
 def main() -> None:
     crawler_mod.CrawlEngine._cut = timed_cut
+    crawler_mod.CrawlEngine._latency_mode = noting_latency
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     spark = get_spark(master=f"local[{cpus}]",
                       shuffle_partitions=max(int(cpus), 8),

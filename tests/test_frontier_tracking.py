@@ -1,29 +1,36 @@
 """Round-6 optimization internals: driver-tracked frontier sizes, the
-small-round candidate-prefix shortcut, and the adaptive Bloom-probe
-skip. All three only change PLAN shape / driver bookkeeping — these
-tests pin (a) the tracked size against the actual live frontier every
-round, (b) row-identity of the shortcut prefix, and (c) that a legacy
-checkpoint (state without ``frontier_rows``) still resumes and
-completes identically."""
+small-round candidate-prefix shortcut, the escalation-stats skip and
+the adaptive Bloom-probe skip. All of them only change PLAN shape /
+driver bookkeeping — these tests pin (a) the tracked size against the
+actual live frontier every round, (b) row-identity of the shortcut
+prefix, (c) that a legacy checkpoint (state without ``frontier_rows``)
+still resumes and completes identically, (d) that the stats collect
+is skipped exactly while no site can fill its prefix, with the crawl
+equal to the oracle either way, and (e) that the Bloom filter stays
+complete while the probe is skipped."""
 
 from __future__ import annotations
 
 import json
 import os
 
+import numpy as np
 from pyspark.sql import functions as F
+from test_engine_equivalence import _assert_equivalent
 
 from meilisearchcrawler_spark.config import CrawlConfig
+from meilisearchcrawler_spark.engine.bloom import PartitionedBloom
 from meilisearchcrawler_spark.engine.crawler import (
     CrawlEngine, candidate_prefix)
 from meilisearchcrawler_spark.fixtures.webgen import generate_web, write_parquet
-
+from meilisearchcrawler_spark.functions.urls import url_hash_col
+from meilisearchcrawler_spark.oracle.refcrawler import crawl_site
 from meilisearchcrawler_spark.session import ship_package
 
 
-def _web(tmp_path, seed=19, n_sites=2, pages_per_site=24):
+def _web(tmp_path, seed=19, n_sites=2, pages_per_site=24, fanout=(2, 5)):
     fx = generate_web(seed=seed, n_sites=n_sites,
-                      pages_per_site=pages_per_site)
+                      pages_per_site=pages_per_site, fanout=fanout)
     out = tmp_path / "web"
     out.mkdir(exist_ok=True)
     paths = write_parquet(fx, str(out))
@@ -104,32 +111,99 @@ def test_legacy_state_without_frontier_rows_resumes(spark, tmp_path):
     assert got == want
 
 
+def _spy_selection_kicks(eng) -> dict[int, bool]:
+    """Per round number: did selection take the stats-skip path? Only
+    that path kicks the admission frame from inside ``_select_pops``
+    (the fetch kick comes later, in ``_execute_round``)."""
+    kicks: list[int] = []
+    skipped: dict[int, bool] = {}
+    kick, select = eng._kick, eng._select_pops
+
+    def spy_kick(rnd, df):
+        kicks.append(rnd.no)
+        return kick(rnd, df)
+
+    def spy_select(rnd, budgets):
+        n = len(kicks)
+        try:
+            return select(rnd, budgets)
+        finally:
+            skipped[rnd.no] = len(kicks) > n
+
+    eng._kick, eng._select_pops = spy_kick, spy_select
+    return skipped
+
+
+def _oracle(fx, budget, max_rounds=None):
+    return {s["site"]: crawl_site(fx, s, batch_size=budget,
+                                  max_rounds=max_rounds)
+            for s in fx.seeds}
+
+
 def test_escalation_stats_skip_is_row_identical(spark, tmp_path):
     """With tracked sizes under ``prefix_k`` the escalation stats
-    collect is skipped (round-6). The crawl_log must be identical to
-    the stats-path run (tracking disabled module-wide), and the skip
-    must never fire when a site's frontier could fill its prefix."""
-    from meilisearchcrawler_spark.engine import crawler as crawler_mod
-
+    collect is skipped in every round, and the crawl still equals the
+    sequential oracle."""
     ship_package(spark)
     fx, paths = _web(tmp_path)
-    cfg = dict(round_budget=6, shuffle_partitions=4)
+    eng = CrawlEngine(spark, str(tmp_path / "cat"), paths["pages"],
+                      fx.seeds, fx.robots,
+                      CrawlConfig(round_budget=6, shuffle_partitions=4),
+                      initial_url_seen=fx.url_seen)
+    skipped = _spy_selection_kicks(eng)
+    eng.run(max_rounds=300)
+    assert skipped and all(skipped.values())
+    _assert_equivalent(eng, _oracle(fx, 6))
 
-    def log_of(root):
-        eng = CrawlEngine(spark, root, paths["pages"], fx.seeds, fx.robots,
-                          CrawlConfig(**cfg), initial_url_seen=fx.url_seen)
-        eng.run(max_rounds=300)
-        return sorted(map(tuple, eng.catalog.read("crawl_log")
-                          .select("site", "round", "pos_in_round", "url",
-                                  "counter", "action").collect()))
 
-    want = log_of(str(tmp_path / "skip"))      # tracked: skip active
-    crawler_mod._FRONTIER_SIZE_BOUNDS = False  # stats path for every round
-    try:
-        got = log_of(str(tmp_path / "stats"))
-    finally:
-        crawler_mod._FRONTIER_SIZE_BOUNDS = True
-    assert got == want
+def test_escalation_stats_collected_when_frontier_fills_prefix(spark,
+                                                               tmp_path):
+    """Once a site's tracked frontier reaches ``prefix_k`` (escalation
+    becomes possible) the stats collect runs again, and the crawl
+    still equals the oracle stopped at the same round."""
+    ship_package(spark)
+    fx, paths = _web(tmp_path, seed=29, n_sites=1, pages_per_site=150,
+                     fanout=(30, 40))
+    budget = 2
+    prefix_k = budget * 8 + 64
+    eng = CrawlEngine(spark, str(tmp_path / "cat"), paths["pages"],
+                      fx.seeds, fx.robots,
+                      CrawlConfig(round_budget=budget, shuffle_partitions=4),
+                      initial_url_seen=fx.url_seen)
+    skipped = _spy_selection_kicks(eng)
+    full: dict[int, bool] = {}
+    for _ in range(4):
+        full[eng.round_no] = any(st.frontier_rows >= prefix_k
+                                 for st in eng.sites.values())
+        eng.run_round()
+    assert any(full.values()) and not all(full.values())
+    for no, is_full in full.items():
+        assert skipped[no] == (not is_full), f"round {no}"
+    _assert_equivalent(eng, _oracle(fx, budget, max_rounds=eng.round_no))
+
+
+def test_cogroup_bloom_keeps_bits_while_probe_skipped(spark, tmp_path):
+    """In cogroup mode the per-round Bloom delta is OR-merged into the
+    committed bitmaps even in rounds that skip the probe (small
+    visited table), so once the probe starts it never reports a
+    visited URL as new."""
+    ship_package(spark)
+    fx, paths = _web(tmp_path)
+    eng = CrawlEngine(spark, str(tmp_path / "cat"), paths["pages"],
+                      fx.seeds, fx.robots,
+                      CrawlConfig(round_budget=6, shuffle_partitions=4,
+                                  bloom_probe_mode="cogroup"),
+                      initial_url_seen=fx.url_seen)
+    eng.run(max_rounds=4)
+    assert eng.catalog.table_bytes("visited") < eng.cfg.prune_min_bytes
+    bloom = PartitionedBloom(eng._bloom.num_partitions, eng._bloom.bits,
+                             eng._bloom.k)
+    for r in eng._bloom_latest().collect():
+        bloom.parts[r["pid"]] = np.frombuffer(r["bits"], dtype=np.uint8)
+    hashes = np.array([r[0] for r in eng.visited().select(
+        url_hash_col(F.col("url"))).collect()], dtype=np.int64)
+    assert len(hashes) > 4
+    assert bloom.might_contain(hashes).all()
 
 
 def test_candidate_prefix_small_is_row_identical(spark):
